@@ -145,9 +145,10 @@ OCR_WORD_CORRECTIONS: dict[str, str] = {
 # Salting: a document's spans are pre-aggregated in offset-contiguous chunks
 # of this many offset units, so one mega-document spreads over many reducers.
 SPAN_SALT_CHUNK = 4096
-# Hybrid skew routing: documents with more kept spans than this take the
-# salted two-phase assembly; the rest take the cheaper single-shuffle path
-# (crossover + OOM rationale measured in tools/skew_bench.py / BENCH.md).
+# Hybrid skew routing: documents with more input spans than this (before
+# boilerplate is dropped) take the salted two-phase assembly; the rest take
+# the cheaper single-shuffle path (crossover + OOM rationale measured in
+# tools/skew_bench.py / BENCH.md). Both are read when assembly is planned.
 BIG_DOC_SPANS = 100_000
 # Boilerplate classifier thresholds (Boilerpipe-style NumWords/LinkDensity
 # rules, deterministic; see operators/spans.py docstring).

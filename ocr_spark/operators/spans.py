@@ -1,4 +1,4 @@
-"""Span pipeline core (north_rule): tokenize/classify → salted assembly.
+"""Span pipeline core (north_rule): tokenize/classify → assembly.
 
 Stage 1 — tokenize/classify (NARROW, JVM expressions):
     explode the span array → one row per span; compute per-span features
@@ -6,13 +6,16 @@ Stage 1 — tokenize/classify (NARROW, JVM expressions):
     span-level work on span-level rows, so a 10^6-span mega-document is
     balanced across tasks instead of being one giant array in one row.
 
-Stage 2 — span assembly (the one SHUFFLE, salted):
-    groupBy(doc_id, salt) where salt = floor(offset / SPAN_SALT_CHUNK)
-    pre-aggregates offset-contiguous chunks — a mega-document spreads over
-    many reducers (AQE cannot split a skewed aggregation, so we salt
-    explicitly, SURVEY.md §4). The cheap second groupBy(doc_id) merges the
-    few pre-sorted chunks per document: chunks are sorted by salt and
-    flattened — no re-sort of individual spans.
+Stage 2 — span assembly (one SHUFFLE; mega-documents salted):
+    classify_spans carries each document's input span count on every row,
+    so routing needs no count pass. One groupBy(doc_id, big, salt) sorts
+    each chunk, where big = the document has more than BIG_DOC_SPANS input
+    spans and salt = floor(offset / SPAN_SALT_CHUNK) for big documents, 0
+    otherwise: a normal document is one chunk, final after this shuffle; a
+    mega-document spreads over many reducers (AQE cannot split a skewed
+    aggregation, so we salt explicitly, SURVEY.md §4). Only big chunks take
+    a second groupBy(doc_id), which flattens the pre-sorted chunks in salt
+    order — no re-sort of individual spans.
 
 Boilerplate classifier (main-content extraction, Boilerpipe-style
 NumWords/LinkDensity rules — Kohlschütter et al., WSDM 2010 — made
@@ -71,10 +74,15 @@ def classify_spans(docs: DataFrame) -> DataFrame:
     """Stage 1: explode + per-span features. Narrow — no shuffle.
 
     Input:  (doc_id, spans array<struct<kind,text,media_ref,offset>>)
-    Output: (doc_id, kind, text, media_ref, offset, is_boilerplate)
+    Output: (doc_id, doc_spans, kind, text, media_ref, offset, is_boilerplate)
+    with doc_spans = size(spans), the document's input span count.
     """
-    exploded = docs.select("doc_id", F.explode("spans").alias("span")).select(
-        "doc_id", "span.kind", "span.text", "span.media_ref", "span.offset"
+    # size() is taken before the explode, so the exploded rows need not
+    # carry the whole array (one copy per span: quadratic in a mega-doc)
+    exploded = (
+        docs.select("doc_id", F.size("spans").alias("doc_spans"), "spans")
+        .select("doc_id", "doc_spans", F.explode("spans").alias("span"))
+        .select("doc_id", "doc_spans", "span.kind", "span.text", "span.media_ref", "span.offset")
     )
     return exploded.withColumn(
         "is_boilerplate",
@@ -82,123 +90,62 @@ def classify_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def assemble_spans(
-    classified: DataFrame,
-    drop_boilerplate: bool = True,
-    salt_chunk: int = config.SPAN_SALT_CHUNK,
-    big_doc_spans: int | None = config.BIG_DOC_SPANS,
-) -> DataFrame:
-    """Stage 2: reassembly into ordered span sequences — hybrid salting.
+def assemble_spans(classified: DataFrame, drop_boilerplate: bool = True) -> DataFrame:
+    """Stage 2: reassembly into ordered span sequences (module docstring).
 
     Output: (doc_id, spans array<struct<kind,text,media_ref,order>>)
     with order = 0-based rank of offset among the document's kept spans —
-    the span-sequence-equality contract (kind, text, media_ref, order).
+    the span-sequence-equality contract (kind, text, media_ref, order). A
+    document whose spans are all boilerplate keeps its row, with no spans.
 
-    Skew strategy (measured in tools/skew_bench.py): the salted two-phase
-    aggregation costs a second full-data shuffle (~3× overhead on normal
-    corpora) but is the only thing keeping a 10^6+-span mega-document from
-    owning one reducer (2.1× faster at 3M spans, and an OOM-guard beyond).
-    So documents are routed by span count: normal docs take the single
-    groupBy path, only docs above ``big_doc_spans`` take the salted path.
-    The big-doc id set is long-tail by definition → broadcastable; the
-    count pre-pass shuffles one (doc_id, n) row per document.
-    Set ``big_doc_spans=None`` to force everything through the salted path.
-
-    Cost model: the hybrid re-evaluates the upstream (scan+classify) for
-    the count pass and each branch — cheaper than the extra full-data
-    shuffle when upstream is parquet scan + expressions (measured, 2.5×),
-    but if upstream is an EXPENSIVE Arrow-UDF stage (OCR, image decode),
-    persist/checkpoint the classified frame first, or pass
-    ``big_doc_spans=None`` to keep the single-scan two-shuffle plan.
+    Routing reads ``config.BIG_DOC_SPANS`` and ``config.SPAN_SALT_CHUNK`` at
+    call time. ``big`` is a grouping key, so Catalyst pushes each branch's
+    filter on it below the explode to ``size(spans)``: the mega-document
+    branch is a filtered scan, not a second classify pass. Salting costs a
+    second full-data shuffle (tools/skew_bench.py), which only documents
+    above the threshold pay.
     """
-    kept = classified.filter(~F.col("is_boilerplate")) if drop_boilerplate else classified
+    big = F.col("doc_spans") > config.BIG_DOC_SPANS
+    chunk = (F.col("offset") / F.lit(config.SPAN_SALT_CHUNK)).cast("long")
+    keep = ~F.col("is_boilerplate") if drop_boilerplate else None
+    chunks = classified.groupBy(
+        "doc_id", big.alias("big"), F.when(big, chunk).otherwise(0).alias("salt")
+    ).agg(_collect_sorted(keep).alias("ordered"))
 
-    if big_doc_spans is not None:
-        counts = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n"))
-        big_ids = counts.filter(F.col("__n") > big_doc_spans).select(
-            "doc_id", F.lit(True).alias("__big")
-        )
-        flagged = kept.join(F.broadcast(big_ids), "doc_id", "left")
-        small = _assemble_single_phase(flagged.filter(F.col("__big").isNull()).drop("__big"))
-        big = _assemble_salted(flagged.filter(F.col("__big")).drop("__big"), salt_chunk)
-        return small.unionByName(big)
-    return _assemble_salted(kept, salt_chunk)
-
-
-def _assemble_single_phase(kept: DataFrame) -> DataFrame:
-    """One shuffle: groupBy(doc_id) + sort inside the aggregation. Tie
-    order for duplicate offsets is the full (offset, kind, text, media_ref)
-    tuple — identical to the chunked path."""
-    merged = kept.groupBy("doc_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("offset").alias("offset"),
-                    F.col("kind").alias("kind"),
-                    F.col("text").alias("text"),
-                    F.col("media_ref").alias("media_ref"),
-                )
-            )
-        ).alias("ordered")
-    )
-    return merged.select(
-        "doc_id",
-        F.transform(
-            F.col("ordered"),
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("order"),
-            ),
-        ).cast(_OUT_SPAN_TYPE).alias("spans"),
-    )
-
-
-def _assemble_salted(kept: DataFrame, salt_chunk: int) -> DataFrame:
-    chunked = (
-        kept.withColumn("salt", (F.col("offset") / F.lit(salt_chunk)).cast("long"))
-        .groupBy("doc_id", "salt")
+    small = chunks.filter(~F.col("big")).select("doc_id", "ordered")
+    salted = (
+        chunks.filter(F.col("big"))
+        .groupBy("doc_id")
         .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("offset").alias("offset"),
-                        F.col("kind").alias("kind"),
-                        F.col("text").alias("text"),
-                        F.col("media_ref").alias("media_ref"),
-                    )
-                )
-            ).alias("chunk")
+            F.flatten(
+                F.sort_array(F.collect_list(F.struct("salt", "ordered")))["ordered"]
+            ).alias("ordered")
         )
     )
-
-    merged = chunked.groupBy("doc_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("salt").alias("salt"), F.col("chunk").alias("chunk"))),
-                    lambda a, b: F.when(a["salt"] < b["salt"], F.lit(-1))
-                    .when(a["salt"] > b["salt"], F.lit(1))
-                    .otherwise(F.lit(0)),
-                ),
-                lambda s: s["chunk"],
-            )
-        ).alias("ordered")
+    return small.unionByName(salted).select(
+        "doc_id", _numbered(F.col("ordered")).alias("spans")
     )
 
-    return merged.select(
-        "doc_id",
-        F.transform(
-            F.col("ordered"),
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("order"),
-            ),
-        ).cast(_OUT_SPAN_TYPE).alias("spans"),
-    )
+
+def _collect_sorted(keep: Column | None = None) -> Column:
+    """Aggregate: the group's spans (rows where ``keep`` holds) sorted by
+    the full (offset, kind, text, media_ref) tuple — the canonical order,
+    which also breaks ties between duplicate offsets."""
+    span = F.struct("offset", "kind", "text", "media_ref")
+    return F.sort_array(F.collect_list(span if keep is None else F.when(keep, span)))
+
+
+def _numbered(ordered: Column) -> Column:
+    """Ordered spans → the output span type, order = 0-based array index."""
+    return F.transform(
+        ordered,
+        lambda s, i: F.struct(
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
+            i.cast("int").alias("order"),
+        ),
+    ).cast(_OUT_SPAN_TYPE)
 
 
 def span_language_runs(
@@ -442,7 +389,7 @@ def coalesce_spans(
     total order as :func:`assemble_spans`' tie rule.
 
     Plan: hybrid on ``size(spans)``, routed NARROWLY (the array length is
-    already in the row — no count pre-pass, unlike assemble_spans):
+    already in the row — no count pre-pass, as in assemble_spans):
 
     - normal docs: one expression chain per row — array_sort → filter →
       linear fold (F.aggregate) that either appends a span or replaces the
@@ -453,10 +400,10 @@ def coalesce_spans(
       one-giant-array row are exactly what to avoid, so they explode to
       span rows, window over (doc_id | order by the canonical key) marks
       text-run starts (lag(kind)), a running sum assigns run ids, one
-      groupBy(doc_id, run) merges each run, and the existing
-      single-phase assembly rebuilds the array. The per-doc window puts a
-      mega-doc on one task for the flag pass — linear work, the same
-      bound as its final array materialization.
+      groupBy(doc_id, run) merges each run, and assembly's sort-and-number
+      step rebuilds the array. The per-doc window puts a mega-doc on one
+      task for the flag pass — linear work, the same bound as its final
+      array materialization.
 
     Both paths produce identical sequences (pytest crosses them on the
     same input). Duplicate (offset, kind, text, media_ref) tuples are
@@ -517,15 +464,7 @@ def coalesce_spans(
             )
         ),
     )
-    out_spans = F.transform(
-        merged_arr,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("order"),
-        ),
-    ).cast(_OUT_SPAN_TYPE)
+    out_spans = _numbered(merged_arr)
 
     if big_doc_spans is None:
         return docs.select(F.col(id_col).alias("doc_id"), out_spans.alias("spans"))
@@ -588,9 +527,10 @@ def coalesce_spans(
     )
     # a mega-doc whose spans ALL drop still owes an empty-sequence row
     # (the small path emits one; explode would silently lose the doc)
-    big = big_docs.join(_assemble_single_phase(grouped), "doc_id", "left").select(
+    ordered = grouped.groupBy("doc_id").agg(_collect_sorted().alias("ordered"))
+    big = big_docs.join(ordered, "doc_id", "left").select(
         "doc_id",
-        F.coalesce(F.col("spans"), F.array().cast(_OUT_SPAN_TYPE)).alias("spans"),
+        F.coalesce(_numbered(F.col("ordered")), F.array().cast(_OUT_SPAN_TYPE)).alias("spans"),
     )
     return small.unionByName(big)
 

@@ -2,7 +2,7 @@
 
 documents(doc_id, spans) →
   stage 1 classify (narrow)            operators/spans.classify_spans
-  stage 2 salted assembly (shuffle)    operators/spans.assemble_spans
+  stage 2 assembly (shuffle)           operators/spans.assemble_spans
   stage 3 document features (narrow)   extracted_text, structured_data,
                                        layout columns, validity flags
 
@@ -14,7 +14,9 @@ typed row per document:
   columns array<ColumnData>, columns_count, has_multiple_columns,
   n_spans, n_media
 
-Everything after the single assembly shuffle is narrow projection work —
+A document takes one assembly shuffle; only mega-documents (more than
+config.BIG_DOC_SPANS input spans) take a second one that merges their
+salted chunks. Everything after assembly is narrow projection work —
 Catalyst pipelines it into the same stage; nothing re-shuffles.
 """
 
@@ -116,15 +118,8 @@ def process_pdfs(text_pages: DataFrame, visual_pages: DataFrame | None = None) -
     )
 
 
-def extract_documents(
-    docs: DataFrame,
-    drop_boilerplate: bool = True,
-    salt_chunk: int = config.SPAN_SALT_CHUNK,
-) -> DataFrame:
-    classified = S.classify_spans(docs)
-    assembled = S.assemble_spans(
-        classified, drop_boilerplate=drop_boilerplate, salt_chunk=salt_chunk
-    )
+def extract_documents(docs: DataFrame, drop_boilerplate: bool = True) -> DataFrame:
+    assembled = S.assemble_spans(S.classify_spans(docs), drop_boilerplate=drop_boilerplate)
 
     text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == "text")
     extracted_text = F.array_join(F.transform(text_spans, lambda s: s["text"]), "\n")

@@ -5662,11 +5662,13 @@ def q_spans_quality_filter(spark: SparkSession, sf: str) -> DataFrame:
     f"""
 WITH {_SQL_KEPT_SPANS},
 edoc AS (
-  SELECT doc_id,
-         coalesce(string_agg(CASE WHEN kind = 'text' THEN text END, chr(10) ORDER BY "offset"), '') AS extracted_text,
-         count(*)::BIGINT AS n_spans,
-         sum(CASE WHEN kind = 'media' THEN 1 ELSE 0 END)::BIGINT AS n_media
-  FROM skept GROUP BY doc_id
+  SELECT d.doc_id,
+         coalesce(string_agg(CASE WHEN k.kind = 'text' THEN k.text END, chr(10) ORDER BY k."offset"), '') AS extracted_text,
+         count(k.doc_id)::BIGINT AS n_spans,
+         coalesce(sum(CASE WHEN k.kind = 'media' THEN 1 ELSE 0 END), 0)::BIGINT AS n_media
+  FROM (SELECT DISTINCT doc_id FROM span_rows) d
+  LEFT JOIN skept k ON k.doc_id = d.doc_id
+  GROUP BY d.doc_id
 ),
 ecols AS (
   SELECT doc_id, extracted_text, n_spans, n_media,

@@ -401,6 +401,13 @@ def _minipdf_info(data: bytes) -> dict[str, str | None]:
     return out
 
 
+def _with_id(docs: DataFrame, id_col: str) -> DataFrame:
+    """Rows the mapInPandas adapters can key: a NULL document id has no
+    output row to land in, so it is skipped here instead of raising in
+    ``int(rid)`` and killing the task."""
+    return docs.filter(F.col(id_col).isNotNull())
+
+
 def extract_pages(docs: DataFrame, id_col: str = "doc_id", content_col: str = "content") -> DataFrame:
     """S2: per-page direct text (pdf_processor.py:168-184), one output row
     per page. Uses pypdf when installed; falls back to the built-in
@@ -436,7 +443,9 @@ def extract_pages(docs: DataFrame, id_col: str = "doc_id", content_col: str = "c
                     out["text"].append(text)
             yield pd.DataFrame(out)
 
-    return docs.select(F.col(id_col), F.col(content_col)).mapInPandas(process, PAGES_SCHEMA)
+    return _with_id(docs.select(F.col(id_col), F.col(content_col)), id_col).mapInPandas(
+        process, PAGES_SCHEMA
+    )
 
 
 def extract_metadata(docs: DataFrame, id_col: str = "doc_id", content_col: str = "content") -> DataFrame:
@@ -475,7 +484,9 @@ def extract_metadata(docs: DataFrame, id_col: str = "doc_id", content_col: str =
                     out[c].append(info.get(c))
             yield pd.DataFrame(out)
 
-    return docs.select(F.col(id_col), F.col(content_col)).mapInPandas(process, META_SCHEMA)
+    return _with_id(docs.select(F.col(id_col), F.col(content_col)), id_col).mapInPandas(
+        process, META_SCHEMA
+    )
 
 
 def concat_pages(pages: DataFrame) -> DataFrame:
@@ -642,7 +653,7 @@ def rasterize_pages(pages: DataFrame, width: int = RASTER_W) -> DataFrame:
                 out["height"].append(img.shape[0])
             yield pd.DataFrame(out)
 
-    return pages.mapInPandas(
+    return _with_id(pages, "doc_id").mapInPandas(
         process, "doc_id long, page_number int, data binary, width int, height int"
     )
 
@@ -734,7 +745,7 @@ def rasterize_pages_poppler(
                     out["height"].append(arr.shape[0])
             yield pd.DataFrame(out)
 
-    return docs.mapInPandas(
+    return _with_id(docs, id_col).mapInPandas(
         process, "doc_id long, page_number int, data binary, width int, height int"
     )
 

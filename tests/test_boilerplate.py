@@ -552,11 +552,11 @@ def test_html_to_spans_interleaving_and_keep_policy(spark):
 
 def test_html_to_spans_feeds_flagship_assembler(spark):
     """The crawl bridge emits the exact corpus shape the flagship span
-    assembler consumes: exploding html_to_spans output and running
-    assemble_spans yields ordered (kind, text, media_ref, order)
+    assembler consumes: classify_spans then assemble_spans over
+    html_to_spans output yields ordered (kind, text, media_ref, order)
     sequences with order = rank of offset."""
     from ocr_spark.operators.boilerplate import html_to_spans
-    from ocr_spark.operators.spans import assemble_spans
+    from ocr_spark.operators.spans import assemble_spans, classify_spans
 
     body = (
         "A long and steady paragraph of real article prose with enough "
@@ -564,15 +564,7 @@ def test_html_to_spans_feeds_flagship_assembler(spark):
     )
     page = f'<p>{body}</p><img src="a.png"><p>{body}</p>'
     df = spark.createDataFrame([(7, page)], "doc_id long, html string")
-    exploded = (
-        html_to_spans(df)
-        .select("doc_id", F.explode("spans").alias("s"))
-        .select(
-            "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset",
-            F.lit(False).alias("is_boilerplate"),
-        )
-    )
-    out = assemble_spans(exploded).collect()
+    out = assemble_spans(classify_spans(html_to_spans(df))).collect()
     assert len(out) == 1
     seq = out[0]["spans"]
     assert [s["kind"] for s in seq] == ["text", "media", "text"]

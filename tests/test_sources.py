@@ -30,6 +30,18 @@ def test_extract_pages_bad_bytes_drop_gracefully(spark):
     assert pdf.extract_pages(df).count() == 0
 
 
+def test_extract_pages_skips_null_doc_id(spark):
+    """A NULL id has no output row to key: the row is skipped, the rest of
+    the batch still extracts (a bad row degrades, never kills the task)."""
+    from ocr_spark.sources.pdf_fixture import synth_pdf_bytes
+
+    data = bytearray(synth_pdf_bytes(1, 2))
+    df = spark.createDataFrame([(None, data), (5, data)], "doc_id long, content binary")
+    rows = pdf.extract_pages(df).collect()
+    assert sorted((r["doc_id"], r["page_number"]) for r in rows) == [(5, 1), (5, 2)]
+    assert [r["doc_id"] for r in pdf.extract_metadata(df).collect()] == [5]
+
+
 def test_minipdf_unsupported_filter_routes_to_ocr():
     """A DCT/CCITT/JPX-filtered CONTENT stream must not kill the job: the
     decoder still raises the actionable error (dependency boundary), but
@@ -306,10 +318,11 @@ def test_rasterize_pages_band_structure(spark):
     import numpy as np
 
     pages = spark.createDataFrame(
-        [(1, 1, "hello line"), (1, 2, "two\nlines here"), (2, 1, "")],
+        [(1, 1, "hello line"), (1, 2, "two\nlines here"), (2, 1, ""), (None, 1, "no id")],
         "doc_id long, page_number int, text string",
     )
     out = {(r["doc_id"], r["page_number"]): r for r in pdf.rasterize_pages(pages).collect()}
+    assert len(out) == 3  # the NULL-id page is skipped
     one = out[(1, 1)]
     img = np.frombuffer(bytes(one["data"]), dtype=np.uint8).reshape(one["height"], one["width"])
     want = pdf.render_page_array("hello line")
@@ -659,7 +672,7 @@ def test_poppler_adapter_wiring_without_poppler(spark, monkeypatch, tmp_path):
     rasterize_pages_poppler's full mapInPandas adapter shape — raw PDF
     bytes → convert_from_bytes(dpi=300) → PIL convert('L') → grayscale
     array rows in rasterize_pages' exact schema — and that an unparseable
-    PDF contributes zero rows instead of killing the task."""
+    PDF or a NULL id contributes zero rows instead of killing the task."""
     p, _ = _install_fake_pdf2image(monkeypatch, tmp_path)
     spark.sparkContext.addPyFile(str(p))
 
@@ -667,6 +680,7 @@ def test_poppler_adapter_wiring_without_poppler(spark, monkeypatch, tmp_path):
         (1, bytearray(b"%PDF3 three pages")),
         (2, bytearray(b"%PDF1 one page")),
         (3, bytearray(b"not a pdf at all")),  # poppler raises -> 0 rows
+        (None, bytearray(b"%PDF2 no id")),  # NULL id -> skipped, 0 rows
     ]
     docs = spark.createDataFrame(rows, "doc_id long, content binary")
     out = pdf.rasterize_pages_poppler(docs, dpi=300).collect()

@@ -4,33 +4,54 @@ pure-Python golden, including mega-documents crossing salt chunks."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark import config
 from ocr_spark.pipeline import extract_documents
 from ocr_spark.sources import corpus
 from tests import reference_impl as ref
 
 
+# a document whose spans are all boilerplate keeps its row, with no spans
+_ALL_BOILERPLATE = {
+    "doc_id": "doc-all-boilerplate",
+    "spans": [
+        {"kind": "text", "text": "© 2024 Example Corp", "media_ref": "", "offset": 0},
+        {"kind": "text", "text": "<a href=/home>menu</a>", "media_ref": "", "offset": 16},
+    ],
+}
+
+
 @pytest.fixture(scope="module")
 def docs():
-    # 120 docs, 2 mega-docs (5k spans) so assembly crosses many salt chunks
-    return corpus.generate_docs(120, seed=7, mega_docs=2, mega_spans=5000)
+    # 120 docs, 2 mega-docs (5k spans) so salted assembly crosses many chunks
+    generated = corpus.generate_docs(120, seed=7, mega_docs=2, mega_spans=5000)
+    return generated + [_ALL_BOILERPLATE]
 
 
-@pytest.fixture(scope="module")
-def spark_result(spark, docs, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("corpus"))
+def _write(docs, path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pq.write_table(
-        pa.Table.from_pylist(docs, schema=corpus.SCHEMA), path + "/part-0.parquet"
-    )
+    pq.write_table(pa.Table.from_pylist(docs, schema=corpus.SCHEMA), path + "/part-0.parquet")
+
+
+@pytest.fixture(scope="module", params=["default", "all_salted"])
+def spark_result(request, spark, docs, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("corpus"))
+    _write(docs, path)
     df = spark.read.parquet(path)
-    # tiny salt chunk so even normal docs span multiple chunks
-    out = extract_documents(df, salt_chunk=64)
-    return {r["doc_id"]: r for r in out.collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        if request.param == "all_salted":
+            # every document salted, in chunks small enough that normal
+            # documents span several of them
+            mp.setattr(config, "BIG_DOC_SPANS", 0)
+            mp.setattr(config, "SPAN_SALT_CHUNK", 64)
+        out = extract_documents(df)
+        return {r["doc_id"]: r for r in out.collect()}
 
 
 @pytest.fixture(scope="module")
@@ -67,19 +88,30 @@ def test_mega_doc_crosses_chunks(spark_result, golden):
     assert spark_result[mega]["n_spans"] == golden[mega]["n_spans"]
 
 
-def test_assembly_plan_has_two_aggregates(spark, docs, tmp_path_factory):
-    """The salted assembly must be a two-phase aggregation (partial skew
-    defusal), visible as two ObjectHashAggregate pairs in the plan."""
-    path = str(tmp_path_factory.mktemp("corpus_plan"))
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def test_all_boilerplate_doc_keeps_empty_row(spark_result, golden):
+    assert golden[_ALL_BOILERPLATE["doc_id"]]["spans"] == []
+    row = spark_result[_ALL_BOILERPLATE["doc_id"]]
+    assert row["spans"] == [] and row["extracted_text"] == ""
 
-    pq.write_table(
-        pa.Table.from_pylist(docs[:5], schema=corpus.SCHEMA), path + "/p.parquet"
-    )
-    df = spark.read.parquet(path)
-    plan = extract_documents(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") >= 2  # salt shuffle + doc_id shuffle
+
+def test_assembly_plan_routes_without_count_pass(spark, docs, tmp_path_factory):
+    """Assembly routes on the input span count: no count pre-pass, no
+    broadcast join, and each branch filters on size(spans) right below its
+    explode, so the mega-document branch is a filtered scan."""
+    path = str(tmp_path_factory.mktemp("corpus_plan"))
+    _write(docs[:5], path)
+    plan = extract_documents(spark.read.parquet(path))._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan
+    assert not re.search(r"functions=\[[^\]]*count\(", plan), plan
+    lines = plan.split("\n")
+    explodes = [i for i, ln in enumerate(lines) if "Generate explode(spans" in ln]
+    assert len(explodes) == 2, plan  # the one-shuffle and the salted branch
+    for i in explodes:
+        # exploded rows must not carry the whole input array along
+        carried = re.search(r"Generate explode\(spans#\d+\), \[([^\]]*)\]", lines[i])
+        assert not re.search(r"(^|\s)spans#", carried.group(1)), lines[i]
+        below = lines[i + 1 : i + 4]
+        assert any("Filter" in ln and "size(spans" in ln for ln in below), plan
 
 
 # --- language runs over interleaved spans -------------------------------------

@@ -2,9 +2,11 @@
 assembly buys when one document is 10^5-10^6 spans (north_rule: "salted
 repartitioning to defuse skew from mega-documents").
 
-Compares assemble_spans with the production salt chunk (offset-contiguous
-sub-groups → many reducers per mega-doc) against an effectively-unsalted
-run (salt chunk larger than any offset → one reducer owns the whole doc).
+Compares assemble_spans at the production routing threshold (only the
+mega-docs are salted into offset-contiguous chunks → many reducers per
+mega-doc) against salting every document (config.BIG_DOC_SPANS = 0) and
+salting none (a threshold above any document → one reducer owns the
+whole mega-doc).
 
 Usage: python tools/skew_bench.py [mega_spans] [n_normal_docs]
 """
@@ -60,8 +62,9 @@ def main() -> None:
     classified.write.mode("overwrite").parquet("/tmp/skew_bench_rows")
     rows = spark.read.parquet("/tmp/skew_bench_rows")
 
-    def run(**kw) -> float:
-        out = assemble_spans(rows, **kw)
+    def run(big_doc_spans: int) -> float:
+        config.BIG_DOC_SPANS = big_doc_spans  # read when the plan is built
+        out = assemble_spans(rows)
         out.write.format("noop").mode("overwrite").save()  # warm
         return min(
             _timed(out) for _ in range(2)
@@ -73,12 +76,12 @@ def main() -> None:
         return time.time() - t0
 
     modes = {
-        "hybrid": {},  # production default: route by span count
-        "all_salted": {"big_doc_spans": None},  # every doc two-phase
-        "single_phase": {"big_doc_spans": 1 << 60},  # no doc ever salted
+        "hybrid": config.BIG_DOC_SPANS,  # production default: route by span count
+        "all_salted": 0,  # every doc two-phase
+        "single_phase": 1 << 60,  # no doc ever salted
     }
     n_spans = n_docs * 12 + 2 * mega_spans
-    results = {name: run(**kw) for name, kw in modes.items()}
+    results = {name: run(threshold) for name, threshold in modes.items()}
     print(
         f"spans={n_spans} mega_docs=2x{mega_spans} | "
         + "  ".join(f"{k}: {v:.1f}s" for k, v in results.items())
